@@ -41,6 +41,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from sdu_hadoop_indexer_spark import caching
 from sdu_hadoop_indexer_spark.registry import all_queries
 from sdu_hadoop_indexer_spark.session import get_spark
 
@@ -419,21 +420,13 @@ def canary_spin_ms() -> float:
     return dt if acc >= 0 else dt
 
 
-def _clear_containment_cache() -> None:
-    from sdu_hadoop_indexer_spark.llm import dedup
-
-    for df in dedup._CONTAINMENT_CACHE.values():
-        df.unpersist()
-    dedup._CONTAINMENT_CACHE.clear()
-
-
-# Ops whose registered fn returns a memoize-persisted staged artifact: the
-# pin exists for composers (llm_contamination_matrix reads the containment
-# edges the way dedup_lsh_quality_eval reads the tau=0.9 set), but THIS
-# op's bench row is defined as the cost of BUILDING the artifact — so the
-# cache is cleared before every timed sample. Without this, samples 2+
+# Ops whose registered fn returns a pinned staged artifact: the pin exists
+# for composers (llm_contamination_matrix reads the containment edges the
+# way dedup_lsh_quality_eval reads the tau=0.9 set), but THIS op's bench
+# row is defined as the cost of BUILDING the artifact — so the pin is
+# cleared before every timed sample. Without this, samples 2+
 # read the pin (~0.2 s) and the frozen row silently changes meaning.
-COLD_CACHES = {"dedup_containment": _clear_containment_cache}
+COLD_CACHES = {"dedup_containment": lambda: caching.clear("containment")}
 
 # Ops that get ONE untimed warm-in rep before their timed samples
 # (COLD_CACHES still clears per rep, so the data work stays cold).

@@ -8,11 +8,10 @@ Catalyst pushes predicates and prunes columns into these scans for free
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import caching
 from .session import tune
 
 TABLES = (
@@ -31,9 +30,6 @@ TABLES = (
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 
-_TABLE_CACHE: dict[tuple[str, str], tuple[tuple[int, int], DataFrame]] = {}
-
-
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table. All queries funnel through here.
 
@@ -43,26 +39,22 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     microsecond timestamp here. Any cross-engine-compared output derived from
     it must still be truncated to second precision (FIXTURES.md parity trap 1).
 
-    The DataFrame HANDLE is memoized per (session, path, file stamp):
+    The DataFrame HANDLE is pinned (``caching.pin``, form ``"plan"``):
     ``spark.read.parquet`` costs ~125 ms of schema inference + py4j per
     call (measured), and every query build pays it once per table touched
     — per bench rep, per gate row. Reusing the logical-plan handle is not
     result caching (execution still scans the parquet files every action);
-    the (mtime_ns, size) stamp drops the entry the moment a fixture file
-    or directory is rewritten, so tests that regenerate data under the
-    same path never see a stale file listing."""
+    the pin's file stamp drops the handle the moment a fixture file is
+    rewritten, so tests that regenerate data under the same path never
+    see a stale file listing."""
     tune(spark)
-    path = f"{sf_dir}/{name}.parquet"
-    try:
-        st = os.stat(path)
-        stamp = (st.st_mtime_ns, st.st_size)
-    except OSError:
-        stamp = (0, -1)  # unreadable now: never a valid cache hit
-    key = (spark.sparkContext.applicationId, path)
-    hit = _TABLE_CACHE.get(key)
-    if hit is not None and hit[0] == stamp and stamp != (0, -1):
-        return hit[1]
-    df = spark.read.parquet(path)
+    return caching.pin(
+        "table", spark, sf_dir, lambda: _read(spark, sf_dir, name), "plan", (name,)
+    )
+
+
+def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":  # TIMESTAMP(NANOS) fixture variant
@@ -72,28 +64,20 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # on the stored wall-clock instant — it only moves the type to
             # TIMESTAMP_LTZ so unix_micros/unix_timestamp/window() resolve.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    _TABLE_CACHE[key] = (stamp, df)
     return df
 
 
-_RG_CACHE: dict[str, int] = {}
-
-
-def _effective_scan_tasks(path: str) -> int:
+def _row_groups(path: str) -> int:
     """Decode parallelism of one parquet file = its row-group count (Spark
     can split a file into byte ranges, but a row group is decoded whole by
     the split holding its midpoint — a single-row-group file is ONE task no
-    matter how many splits the scheduler makes). Footer-only read, cached."""
-    n = _RG_CACHE.get(path)
-    if n is None:
-        try:
-            import pyarrow.parquet as pq
+    matter how many splits the scheduler makes). Footer-only read."""
+    try:
+        import pyarrow.parquet as pq
 
-            n = pq.ParquetFile(path).num_row_groups
-        except Exception:
-            n = 1_000_000  # unknown layout: assume splittable, never spread
-        _RG_CACHE[path] = n
-    return n
+        return pq.ParquetFile(path).num_row_groups
+    except Exception:
+        return 1_000_000  # unknown layout: assume splittable, never spread
 
 
 def spread(
@@ -121,12 +105,13 @@ def spread(
     ``table_name``/``sf_dir`` name a fixture file, otherwise the
     DataFrame's own partition count) is below half the parallelism — a
     real cluster scan with healthy splits makes this a no-op, so no plan
-    gains a shuffle at 100 TB. ``SPARK_GRAFT_SPREAD=0`` disables it."""
-    if os.environ.get("SPARK_GRAFT_SPREAD", "1") in ("0", "false"):
-        return df
+    gains a shuffle at 100 TB."""
     par = spark.sparkContext.defaultParallelism
     if table_name is not None and sf_dir is not None:
-        eff = _effective_scan_tasks(f"{sf_dir}/{table_name}.parquet")
+        path = f"{sf_dir}/{table_name}.parquet"
+        eff = caching.pin(
+            "row_groups", spark, sf_dir, lambda: _row_groups(path), "plan", (table_name,)
+        )
     else:
         eff = df.rdd.getNumPartitions()
     if 2 * eff >= par:

@@ -805,7 +805,8 @@ def mixing_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("n_tokens"),
         (F.col("doc_id") % _M31 * _KNUTH % _M32).alias("r"),
     )
-    n_sources = d.select("source").distinct().count()
+    # ≥ 1 keeps the weight literal defined on an empty corpus (no groups)
+    n_sources = max(d.select("source").distinct().count(), 1)
     s = t.groupBy("source").agg(
         F.count("*").alias("n_docs"),
         F.sum("n_tokens").alias("tokens"),
@@ -1113,15 +1114,6 @@ BIGRAM_PPL_SQL = """
 # (~50-100 B/row — the ADVICE r10 finding the exact-rows gate exists for).
 _C2_BROADCAST_ROW_BYTES = 160
 
-# Memoized persisted C2 (bigram-count) relation per (app, sf_dir) — the
-# same staged-artifact discipline as dedup._token_sets. Without the pin,
-# every bigram_ppl invocation (and llm_ppl_buckets, which composes it)
-# persisted a FRESH copy of the same deterministic lineage whenever the
-# byte gate passed, and the copies accumulated in the session's storage
-# layer for its lifetime (ADVICE r11 medium).
-_C2_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 @register("llm_bigram_ppl", oracle=BIGRAM_PPL_SQL)
 def bigram_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bigram-LM quality score with add-one smoothing: per-document mean
@@ -1164,13 +1156,16 @@ def bigram_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     # HashedRelation-matched width — measure, don't guess. C1's key set is
     # the distinct first-terms of C2, so |C1| ≤ |C2| and one count gates
     # both. Past either gate the hints drop and the re-joins become
-    # co-partitioned shuffles on their keys (VERDICT r9 item 1).
-    from ..caching import memoized_persist
+    # co-partitioned shuffles on their keys (VERDICT r9 item 1). The
+    # persisted C2 is pinned per input, the dedup._token_sets discipline:
+    # without the pin every bigram_ppl call (and llm_ppl_buckets, which
+    # composes it) persisted a FRESH copy of the same lineage, and the
+    # copies accumulated in the session's storage layer (ADVICE r11).
+    from .. import caching
     from .dedup import _arrs_fits_broadcast, _fits_broadcast
 
     if _arrs_fits_broadcast(spark, sf_dir):
-        c2_unpinned = c2
-        c2 = memoized_persist(_C2_CACHE, spark, sf_dir, lambda: c2_unpinned)
+        c2 = caching.pin("c2", spark, sf_dir, lambda: c2, "persist")
         if _fits_broadcast(spark, c2.count(), _C2_BROADCAST_ROW_BYTES):
             c2, c1 = F.broadcast(c2), F.broadcast(c1)
     lp = (

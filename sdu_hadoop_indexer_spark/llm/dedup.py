@@ -25,6 +25,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import caching
 from ..catalog import table
 from ..iteration import RoundStager, stage_round
 from ..operators.parity import ratio, sql_ratio
@@ -54,26 +55,22 @@ tsize AS (SELECT doc_id, count(*) AS sz FROM tset GROUP BY doc_id)
 """
 
 
-_TSET_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _token_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The tokenized-corpus relation every exact-join operator starts from
     (near-jaccard, containment, minhash signatures, triangle counting).
-    Memoize-persisted per (app, sf_dir): it is docs×distinct-tokens rows
+    Pinned per input (``caching.pin``): it is docs×distinct-tokens rows
     (116 k at sf0.1 — tiny next to the pipelines it feeds), and without
     the pin each consumer re-runs the scan→tokenize→distinct shuffle from
     parquet (measured 5.6 s per rebuild at sf0.1). At cluster scale this
     is the tokenized corpus a dedup pipeline stages ONCE as parquet and
     every downstream stage reads — the same staged-artifact discipline as
     the band table (`_lsh_bands`) and the τ=0.9 edge set."""
-    from ..caching import memoized_persist
-
-    return memoized_persist(
-        _TSET_CACHE,
+    return caching.pin(
+        "token_sets",
         spark,
         sf_dir,
         lambda: tokenize(spark, sf_dir).select("doc_id", "term").distinct(),
+        "persist",
     )
 
 
@@ -327,14 +324,15 @@ def _fits_broadcast(spark: SparkSession, rows: int, bytes_per_row: int) -> bool:
     session's own autoBroadcastJoinThreshold. Unknown row count (< 0) or
     broadcast-disabled threshold → False: the hint is omitted and the join
     degrades to a co-partitioned shuffle — a slowdown, never an OOM."""
-    if rows < 0:
-        return False
-    cap = _parse_size_bytes(
+    cap = _broadcast_cap(spark)
+    return rows >= 0 and cap > 0 and rows * bytes_per_row <= cap
+
+
+def _broadcast_cap(spark: SparkSession) -> int:
+    """The session's autoBroadcastJoinThreshold in bytes (≤ 0: disabled)."""
+    return _parse_size_bytes(
         spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
     )
-    if cap <= 0:
-        return False
-    return rows * bytes_per_row <= cap
 
 
 def _arrs_fits_broadcast(spark: SparkSession, sf_dir: str) -> bool:
@@ -345,12 +343,12 @@ def _arrs_fits_broadcast(spark: SparkSession, sf_dir: str) -> bool:
     the threshold (or threshold ≤ 0, Spark's broadcast-disabled setting)
     the caller omits the hint and the join degrades to a co-partitioned
     shuffle — a slowdown, never an executor OOM."""
-    cap = _parse_size_bytes(
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    )
-    if cap <= 0:
-        return False
-    return _source_bytes(sf_dir, "documents") * _ARRS_EXPANSION <= cap
+    cap = _broadcast_cap(spark)
+    return cap > 0 and _arrs_bytes(sf_dir) <= cap
+
+
+def _arrs_bytes(sf_dir: str) -> int:
+    return _source_bytes(sf_dir, "documents") * _ARRS_EXPANSION
 
 
 @register(
@@ -398,7 +396,7 @@ def dedup_near_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup count. At 100 TB this is the published exact-join scale
     path; the LSH family remains the approximate one.
 
-    The verified pair relation is memoize-persisted per (app, sf_dir)
+    The verified pair relation is pinned per input
     (VERDICT r5 item 2): it is the τ=0.9 similarity EDGE SET that
     `graph_triangle_count` and `dedup_lsh_quality_eval` both consume, and
     re-materializing the candidate-verify pipeline (11 M candidates at
@@ -407,26 +405,14 @@ def dedup_near_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned copy is tiny next to the work it saves; at cluster scale this
     is the staged edge table a dedup pipeline would write between stages.
     """
-    from ..caching import memoized_persist
-    from ..iteration import stage_round
-
-    # checkpoint LEAF inside the memoized build (r15, the capped-edge-pin
-    # finding): a bare persist keeps the candidate+verify lineage in the
-    # handle and every consumer branch re-analyzes it driver-side. The
-    # edge set is pairs-sized and every consumer re-aggregates or joins
-    # it through its own shuffles, so the frozen-partitioning caveat of
-    # the bands pin does not apply.
-    return memoized_persist(
-        _NEAR_JACCARD_CACHE,
-        spark,
-        sf_dir,
-        lambda: stage_round(_near_jaccard_build(spark, sf_dir), False),
-        # the leaf IS the pin — no second persist (ADVICE r15)
-        pin=False,
+    # checkpoint LEAF (r15, the capped-edge-pin finding): a bare persist
+    # keeps the candidate+verify lineage in the handle and every consumer
+    # branch re-analyzes it driver-side. The edge set is pairs-sized and
+    # every consumer re-aggregates or joins it through its own shuffles,
+    # so the frozen-partitioning caveat of the bands pin does not apply.
+    return caching.pin(
+        "near_jaccard", spark, sf_dir, lambda: _near_jaccard_build(spark, sf_dir), "leaf"
     )
-
-
-_NEAR_JACCARD_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def _near_jaccard_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -675,21 +661,17 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# One cached band relation per (app, sf_dir): the tokenize→fold→signature→
-# band lineage is rebuilt identically by dedup_minhash_lsh,
-# dedup_minhash_cluster, dedup_cluster_keep_best and every bench repetition —
-# at cluster scale this is the staged signatures table (parquet). Memoizing
-# ONE persisted copy (docs × N_BANDS rows — tiny) also stops the per-call
-# persist() copies from accumulating in the long-lived gate/bench session,
-# which LRU-evicted and silently recomputed the lineage mid-suite.
-_BANDS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _lsh_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, band_idx, band_hash): one row per doc per LSH band. Band
     hash = the xhash combine-fold over the band's row minima (DuckDB twin:
-    combine_sql), keeping the bucket keys engine-portable."""
-    from ..caching import memoized_persist
+    combine_sql), keeping the bucket keys engine-portable.
+
+    Pinned per input: the tokenize→fold→signature→band lineage is rebuilt
+    identically by dedup_minhash_lsh, dedup_minhash_cluster,
+    dedup_cluster_keep_best and every bench repetition — at cluster scale
+    this is the staged signatures table (parquet). ONE persisted copy
+    (docs × N_BANDS rows — tiny) also stops per-call persist() copies from
+    accumulating in the long-lived gate/bench session."""
 
     def build() -> DataFrame:
         sig = minhash_signatures(spark, sf_dir)
@@ -704,7 +686,7 @@ def _lsh_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.posexplode(F.array(*band_cols)).alias("band_idx", "band_hash"),
         )
 
-    return memoized_persist(_BANDS_CACHE, spark, sf_dir, build)
+    return caching.pin("lsh_bands", spark, sf_dir, build, "persist")
 
 
 INC_MOD = 10  # doc_id % INC_MOD == 0 → the "new batch" (10% of the corpus)
@@ -873,11 +855,11 @@ def dedup_minhash_est_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("toks").alias("tb"),
         F.col("sz").alias("sb"),
     )
-    # per-doc row ≈ 16 hashes + the token array — broadcast only when
-    # BOTH the arrs gate and the 256 B/row signature gate agree
-    if _arrs_fits_broadcast(spark, sf_dir) and _fits_broadcast(
-        spark, _table_rows(sf_dir, "documents"), 256
-    ):
+    # per-doc row = 256 B of signature + the token array: gate on the
+    # SUMMED width (each part alone can pass while the row is ~2× the cap)
+    n_docs = _table_rows(sf_dir, "documents")
+    cap = _broadcast_cap(spark)
+    if cap > 0 and n_docs >= 0 and n_docs * 256 + _arrs_bytes(sf_dir) <= cap:
         sa_side, sb_side = F.broadcast(sa_side), F.broadcast(sb_side)
     m = sum(
         F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
@@ -1093,19 +1075,11 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SimHash): the 64-conditional-sum vote aggregation dominates every
 # consumer, and the hamming pair miner reads the relation on THREE plan
 # branches (block explode + both verify sides) with no exchange reuse —
-# one persisted pin per (app, sf) serves them all, exactly like the
+# one persisted pin per input serves them all, exactly like the
 # staged signature parquet a crawler dedup writes at ingest.
-_SIMHASH_FP_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _simhash_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..caching import memoized_persist
-
-    return memoized_persist(
-        _SIMHASH_FP_CACHE,
-        spark,
-        sf_dir,
-        lambda: dedup_simhash(spark, sf_dir),
+    return caching.pin(
+        "simhash_fp", spark, sf_dir, lambda: dedup_simhash(spark, sf_dir), "persist"
     )
 
 
@@ -1402,15 +1376,26 @@ def _triu_drop_flags(x, dropped):
     n = len(x)
     if n > 1:
         ii, jj = np.triu_indices(n, k=1)
-        step = 2_000_000  # bounded gather: ~2M pairs × 64 dims per block
-        for s in range(0, len(ii), step):
-            ib, jb = ii[s : s + step], jj[s : s + step]
-            am, bm = x[ib], x[jb]
-            dot = np.einsum("ij,ij->i", am, bm)
-            na = np.linalg.norm(am, axis=1)
-            nb = np.linalg.norm(bm, axis=1)
-            cos = np.round(dot / (na * nb), 4) + 0.0
-            dropped[jb[cos >= COSINE_DUP_TAU]] = True
+        for ib, jb in _pair_chunks(ii, jj):
+            dropped[jb[_pair_cosines(x[ib], x[jb]) >= COSINE_DUP_TAU]] = True
+
+
+def _pair_chunks(ii, jj, step=2_000_000):
+    """Bounded gathers: ~2M pairs × 64 dims per block."""
+    for s in range(0, len(ii), step):
+        yield ii[s : s + step], jj[s : s + step]
+
+
+def _pair_cosines(am, bm):
+    """Rounded cosine of each gathered row pair — the ONE float recipe
+    (einsum dot, per-row norms, round 4 dp) every SemDeDup path uses, so
+    a cosine on a rounding boundary lands the same way on every path."""
+    import numpy as np
+
+    dot = np.einsum("ij,ij->i", am, bm)
+    na = np.linalg.norm(am, axis=1)
+    nb = np.linalg.norm(bm, axis=1)
+    return np.round(dot / (na * nb), 4) + 0.0
 
 
 def _semantic_cell_verdict(
@@ -1520,19 +1505,26 @@ def _semantic_cell_verdict(
             )
         l = pdf[pdf["side"] == "L"]
         r = pdf[pdf["side"] == "R"]
+        none = pd.DataFrame({"vec_id": [], "cell": [], "dropped": []}).astype(
+            {"vec_id": "int64", "cell": "int32", "dropped": "bool"}
+        )
+        if l.empty or r.empty:  # a hash block can receive no vectors
+            return none
         lid = l["vec_id"].to_numpy(dtype=np.int64)
         rid = r["vec_id"].to_numpy(dtype=np.int64)
         lm = np.array(list(l["embedding"]), dtype=np.float64)
         rm = np.array(list(r["embedding"]), dtype=np.float64)
-        nl = np.linalg.norm(lm, axis=1)
-        nr = np.linalg.norm(rm, axis=1)
-        sim = np.round((lm @ rm.T) / np.outer(nl, nr), 4) + 0.0
-        ai, bj = np.nonzero(sim >= COSINE_DUP_TAU)
-        if not len(ai):
-            return pd.DataFrame(
-                {"vec_id": [], "cell": [], "dropped": []}
-            ).astype({"vec_id": "int64", "cell": "int32", "dropped": "bool"})
-        drop_id = np.maximum(lid[ai], rid[bj])
+        ii, jj = (g.ravel() for g in np.indices((len(lm), len(rm))))
+        drop_id = np.concatenate(
+            [
+                np.maximum(lid[ib], rid[jb])[
+                    _pair_cosines(lm[ib], rm[jb]) >= COSINE_DUP_TAU
+                ]
+                for ib, jb in _pair_chunks(ii, jj)
+            ]
+        )
+        if not len(drop_id):
+            return none
         return pd.DataFrame(
             {
                 "vec_id": drop_id,
@@ -2014,38 +2006,30 @@ def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# one persisted capped-edge relation per (app, sf_dir) — graph operators
-# that materialize it repeatedly (bench reps) must not each pin a fresh
-# copy of the same lineage (the memoized_persist leak discipline).
-# The PINNED relation is the ORIENTED form (src, dst, dst_dg): the
-# triangle counter's wedge join reads it on three branches, and pinning
-# the canonical form instead would re-run the orient join (edge ⋈ degree
-# ⋈ degree, two shuffles) once per branch. Canonical (u, v) is recovered
-# as (least, greatest) — orientation is a permutation of each edge.
-_CAPPED_EDGES_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# one pinned capped-edge relation per input — graph operators that
+# materialize it repeatedly (bench reps) must not each pin a fresh copy of
+# the same lineage. The PINNED relation is the ORIENTED form (src, dst,
+# dst_dg): the triangle counter's wedge join reads it on three branches,
+# and pinning the canonical form instead would re-run the orient join
+# (edge ⋈ degree ⋈ degree, two shuffles) once per branch. Canonical (u, v)
+# is recovered as (least, greatest) — orientation is a permutation of
+# each edge.
 def _capped_oriented_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..caching import memoized_persist
-    from ..iteration import stage_round
-
-    # The pin is staged as a checkpoint LEAF inside the build (r15):
-    # a bare persist keeps the full near-jaccard lineage in the handle,
-    # and every consumer BRANCH re-analyzes that tree — measured 0.4 s of
-    # driver work per reference on a 667-row relation (triangle count
-    # touches it 4×). This is the TARGETED form of the blanket
-    # memoized_persist-checkpoint idea that was tried and reverted: the
-    # frozen-partitioning concern is void here (the capped edge set is
-    # tiny and every consumer broadcasts it or re-spreads with its own
-    # shuffles), unlike the corpus-shaped bands pin where it serialized
-    # the LSH pair expansion.
-    return memoized_persist(
-        _CAPPED_EDGES_CACHE,
+    # The pin is a checkpoint LEAF (r15): a bare persist keeps the full
+    # near-jaccard lineage in the handle, and every consumer BRANCH
+    # re-analyzes that tree — measured 0.4 s of driver work per reference
+    # on a 667-row relation (triangle count touches it 4×). This is the
+    # TARGETED form of the blanket checkpoint-every-pin idea that was
+    # tried and reverted: the frozen-partitioning concern is void here
+    # (the capped edge set is tiny and every consumer broadcasts it or
+    # re-spreads with its own shuffles), unlike the corpus-shaped bands
+    # pin where it serialized the LSH pair expansion.
+    return caching.pin(
+        "capped_edges",
         spark,
         sf_dir,
-        lambda: stage_round(_capped_oriented_edges(spark, sf_dir)[1], False),
-        # the leaf IS the pin — no second persist (ADVICE r15)
-        pin=False,
+        lambda: _capped_oriented_edges(spark, sf_dir)[1],
+        "leaf",
     )
 
 
@@ -2461,32 +2445,19 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard op: at corpus scale the array join degrades to one
     co-partitioned shuffle).
 
-    The verified containment relation is memoize-persisted per
-    (app, sf_dir) — the same staged-edge-table discipline as the τ=0.9
-    Jaccard edges (VERDICT r5 item 2): the asymmetric candidate-verify is
+    The verified containment relation is pinned per input — the same
+    staged-edge-table discipline as the τ=0.9 Jaccard edges (VERDICT r5
+    item 2): the asymmetric candidate-verify is
     the single heaviest pipeline in the extended bench (~10 s per
     re-materialization at sf0.1, pairs-sized output), and at cluster
     scale a contamination audit writes this edge set once between
     stages rather than re-mining it per consumer."""
-    from ..caching import memoized_persist
-
-    from ..iteration import stage_round
-
-    # checkpoint LEAF inside the memoized build (r15): same rationale as
-    # the near-jaccard pin — composers (llm_contamination_matrix) branch
-    # over the pinned edges and paid the full candidate+verify lineage
-    # re-analysis per reference.
-    return memoized_persist(
-        _CONTAINMENT_CACHE,
-        spark,
-        sf_dir,
-        lambda: stage_round(_containment_build(spark, sf_dir), False),
-        # the leaf IS the pin — no second persist (ADVICE r15)
-        pin=False,
+    # checkpoint LEAF (r15): same rationale as the near-jaccard pin —
+    # composers (llm_contamination_matrix) branch over the pinned edges
+    # and paid the full candidate+verify lineage re-analysis per reference.
+    return caching.pin(
+        "containment", spark, sf_dir, lambda: _containment_build(spark, sf_dir), "leaf"
     )
-
-
-_CONTAINMENT_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def _containment_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2782,7 +2753,7 @@ def graph_component_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     `dedup_cluster_keep_best`'s per-cluster ranking.
 
     Pure composition: consumes the registered `dedup_minhash_cluster`
-    assignment (memoized per (app, sf) — the iterative CC never re-runs
+    assignment (pinned per input — the iterative CC never re-runs
     when both ops execute in one session) and reduces it with two
     stacked hash aggs, each output-bounded (clusters, then distinct
     sizes). The oracle reuses the cluster oracle's unrolled min-label
@@ -2836,7 +2807,7 @@ def dedup_cross_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-source counts are judged against.
 
     Pure composition: consumes the registered `dedup_near_jaccard` edge
-    relation (memoize-persisted per (app, sf) — the 11 M-pair verify
+    relation (pinned per input — the 11 M-pair verify
     never re-runs in-session) and joins the slim (doc_id, source)
     projection twice; output is bounded by source-vocabulary², the
     aggregate order-free (count + max, no float sums)."""
@@ -2903,7 +2874,7 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus) so Σ n_docs = corpus size is the conservation check.
 
     Pure composition: consumes the registered `dedup_near_jaccard` edge
-    relation (memoize-persisted per (app, sf) — the verify pipeline never
+    relation (pinned per input — the verify pipeline never
     re-runs in-session), unions the two endpoint columns (edges stored
     once as doc_a < doc_b, so degree = appearances on either side), and
     reduces with two output-bounded hash aggs. All-integer."""
@@ -2960,7 +2931,7 @@ def llm_contamination_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     effectively embedded in B.
 
     Pure composition: consumes the registered `dedup_containment` edge
-    relation (memoize-persisted per (app, sf) — the heaviest
+    relation (pinned per input — the heaviest
     candidate-verify pipeline in the repo never re-runs in-session, the
     reuse the staging exists for) and joins the slim (doc_id, source)
     projection twice; output source-vocab²-bounded; aggregates order-free

@@ -872,7 +872,7 @@ def events_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed = per_user
     for dim, key in keys.items():
         bexpr = F.lit(0)
-        for pv in pivots[dim]:
+        for pv in pivots[dim] or ():  # None on an empty relation
             bexpr = bexpr + F.when(key > F.lit(pv), 1).otherwise(0)
         bucketed = bucketed.withColumn(f"_b{dim}", bexpr)
     # One job collects all three dimensions' bucket histograms (≤ 3×8 rows).
@@ -2326,7 +2326,7 @@ def agg_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.percentile_approx("v", pcts, 10_000).alias("p")
     ).first()["p"]
     bexpr = F.lit(0)
-    for pv in pivots:
+    for pv in pivots or ():  # None on an empty relation
         bexpr = bexpr + F.when(F.col("v") > F.lit(pv), 1).otherwise(0)
     b = g.withColumn("_b", bexpr)
     offs = sorted(
@@ -2362,7 +2362,7 @@ def agg_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(m).cast("long").alias("m"),
         d_num.cast("long").alias("d_num"),
         ratio(d_num, F.lit(n * m), 6).alias("d_stat"),
-    )
+    ).where(F.lit(n + m > 0))  # no sample values: no group, as in SQL
 
 
 agg_ks_test.__doc__ = agg_ks_test.__doc__.replace("{A}", KS_TYPE_A).replace(
@@ -2529,7 +2529,7 @@ def agg_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.percentile_approx("v", pcts, 10_000).alias("p")
     ).first()["p"]
     bexpr = F.lit(0)
-    for pv in pivots:
+    for pv in pivots or ():  # None on an empty relation
         bexpr = bexpr + F.when(F.col("v") > F.lit(pv), 1).otherwise(0)
     b = g.withColumn("_b", bexpr)
     offs = sorted(
@@ -2568,7 +2568,7 @@ def agg_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(m).cast("long").alias("m"),
         u_x2.cast("long").alias("u_a_x2"),
         ratio(u_x2, F.lit(2 * n * m), 6).alias("auc"),
-    )
+    ).where(F.lit(n + m > 0))  # no sample values: no group, as in SQL
 
 
 @register(

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from sdu_hadoop_indexer_spark import caching
 from sdu_hadoop_indexer_spark.catalog import table
 from sdu_hadoop_indexer_spark.llm import dedup, similarity
 
@@ -546,9 +547,7 @@ def test_near_jaccard_broadcast_gate_both_plan_shapes(spark, sf_dir):
     # drop any memoized copy: plan canonicalization ignores hints, so the
     # CacheManager would substitute the pinned (hinted) relation into BOTH
     # fresh builds and the plan text would show its stored hinted plan.
-    for k, df in list(dedup._NEAR_JACCARD_CACHE.items()):
-        df.unpersist()
-        del dedup._NEAR_JACCARD_CACHE[k]
+    caching.clear("near_jaccard")
     assert dedup._arrs_fits_broadcast(spark, sf_dir)
     plan_b = dedup._near_jaccard_build(spark, sf_dir)
     assert "BroadcastHashJoin" in plan_b._jdf.queryExecution().executedPlan().toString()
@@ -562,6 +561,34 @@ def test_near_jaccard_broadcast_gate_both_plan_shapes(spark, sf_dir):
         assert "BroadcastHashJoin" not in txt
         assert "SortMergeJoin" in txt or "ShuffledHashJoin" in txt
         assert plan_s.count() == rows_b  # identical result under both shapes
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_est_quality_broadcast_gate_sums_row_width(spark, sf_dir):
+    """The fused est_quality side row carries BOTH the 256 B signature and
+    the token array, so its broadcast gate must sum the two widths: at a
+    threshold each part fits alone but the sum does not, the side joins
+    must not broadcast — the plan keeps only the candidate pipeline's own
+    broadcasts."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    sig = dedup._table_rows(sf_dir, "documents") * 256
+    arrs = dedup._arrs_bytes(sf_dir)
+    old = spark.conf.get(key)
+
+    def bhj(df) -> int:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return plan.count("BroadcastHashJoin")
+
+    try:
+        spark.conf.set(key, str(max(sig, arrs)))
+        assert bhj(dedup.dedup_minhash_est_quality(spark, sf_dir)) == bhj(
+            dedup.dedup_minhash_lsh(spark, sf_dir)
+        )
+        spark.conf.set(key, str(sig + arrs))
+        assert bhj(dedup.dedup_minhash_est_quality(spark, sf_dir)) == 2 + bhj(
+            dedup.dedup_minhash_lsh(spark, sf_dir)
+        )
     finally:
         spark.conf.set(key, old)
 
@@ -933,11 +960,14 @@ def test_semantic_hot_cell_decomposition_matches(spark, sf_dir, monkeypatch):
     base = {
         tuple(r) for r in dedup.dedup_semantic_ivf(spark, sf_dir).collect()
     }
-    monkeypatch.setattr(dedup, "SEMANTIC_HOT_CELL_ROWS", 8)
-    split = {
-        tuple(r) for r in dedup.dedup_semantic_ivf(spark, sf_dir).collect()
-    }
-    assert split == base
+    for threshold in (8, 4):
+        # at 4 rows per block, some of a cell's ~16 hash blocks stay empty,
+        # so cross groups arrive with an empty L or R side
+        monkeypatch.setattr(dedup, "SEMANTIC_HOT_CELL_ROWS", threshold)
+        split = {
+            tuple(r) for r in dedup.dedup_semantic_ivf(spark, sf_dir).collect()
+        }
+        assert split == base
 
 
 def test_pq_codebooks_deterministic_and_on_lattice(spark):
@@ -945,7 +975,7 @@ def test_pq_codebooks_deterministic_and_on_lattice(spark):
     runs return identical integer codebooks covering every (cell, dim)."""
     sf = "/root/testdata/sf0.001"
     c1 = similarity._train_pq_codebooks(spark, sf)
-    similarity._PQ_CODEBOOK_CACHE.clear()  # force a genuine retrain
+    caching.clear("pq_codebooks")  # force a genuine retrain
     c2 = similarity._train_pq_codebooks(spark, sf)
     assert c1 is not c2 and c1 == c2
     dims = 1 + max(d for _, d in c1)
@@ -1098,16 +1128,15 @@ def test_bigram_c2_memoized_no_persist_leak(spark, sf_dir):
     fresh persisted copies in the session's storage layer (ADVICE r11)."""
     from sdu_hadoop_indexer_spark.llm import curation
 
-    key = (spark.sparkContext.applicationId, sf_dir)
+    caching.clear("c2")
+    before = caching.stats("c2")
     curation.bigram_ppl(spark, sf_dir).count()
-    assert key in curation._C2_CACHE  # byte gate passes at test SF
-    pinned = curation._C2_CACHE[key]
-    assert pinned.storageLevel.useMemory or pinned.storageLevel.useDisk
-    n_before = len(curation._C2_CACHE)
     curation.bigram_ppl(spark, sf_dir).count()
     curation.ppl_buckets(spark, sf_dir).count()
-    assert curation._C2_CACHE[key] is pinned  # same handle, no new copies
-    assert len(curation._C2_CACHE) == n_before
+    after = caching.stats("c2")
+    # byte gate passes at test SF: one build, every later call a hit
+    assert after["builds"] - before["builds"] == 1
+    assert after["hits"] - before["hits"] >= 2
 
 
 def test_gopher_rules_trip_each_heuristic(spark, tmp_path):

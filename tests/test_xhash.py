@@ -151,12 +151,8 @@ def test_production_lsh_pipeline_catches_exact_dups(spark, sf_dir, monkeypatch):
     family, still emits every identical-token-set pair (identical sets ⇒
     identical signatures ⇒ same buckets — true for ANY hash family; this
     pins that the swap keeps the pipeline's candidate structure)."""
+    from sdu_hadoop_indexer_spark import caching
     from sdu_hadoop_indexer_spark.llm import dedup as D
-
-    def clear_bands_cache() -> None:
-        for df in D._BANDS_CACHE.values():
-            df.unpersist()
-        D._BANDS_CACHE.clear()
 
     key = (
         D._token_sets(spark, sf_dir)
@@ -171,13 +167,13 @@ def test_production_lsh_pipeline_catches_exact_dups(spark, sf_dir, monkeypatch):
     }
 
     monkeypatch.setenv("SPARK_GRAFT_XXHASH", "1")
-    clear_bands_cache()  # bands memoized per (app, sf_dir) — force a rebuild
+    caching.clear("lsh_bands")  # bands memoized per (app, sf_dir) — force a rebuild
     try:
         got = {
             (r.doc_a, r.doc_b)
             for r in D.dedup_minhash_lsh(spark, sf_dir).collect()
         }
     finally:
-        clear_bands_cache()  # don't leak production-family bands to other tests
+        caching.clear("lsh_bands")  # don't leak production-family bands to other tests
         monkeypatch.delenv("SPARK_GRAFT_XXHASH")
     assert same_set_pairs <= got

@@ -13,7 +13,7 @@ Protocol (matches the round-5 study in BASELINE.md):
 - corpora come from the SAME generator at both sizes — never generated
   vs driver fixture;
 - two reps per operator; the SECOND (JVM-warm) rep is reported;
-- `dedup_near_jaccard`'s memoized persist is EVICTED before each of its
+- `dedup_near_jaccard`'s pin is cleared (`caching.clear`) before each of its
   own reps (so rep 2 measures the build, not a cache read), but left warm
   for `graph_triangle_count` — production semantics, and it isolates the
   triangle join's own slope from the edge relation it consumes.
@@ -43,39 +43,10 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def _evict_near_jaccard_memo() -> None:
-    from sdu_hadoop_indexer_spark.llm import dedup
-
-    for k, df in list(dedup._NEAR_JACCARD_CACHE.items()):
-        df.unpersist(blocking=True)
-        del dedup._NEAR_JACCARD_CACHE[k]
-
-
-def _evict_pair_bands_memo() -> None:
-    """Evict the sign-LSH band table so each dedup_embedding_ann rep
-    measures the full band-build + bucket-join + verify, not a pin read."""
-    from sdu_hadoop_indexer_spark.llm import similarity
-
-    for k, df in list(similarity._PAIR_BANDS_CACHE.items()):
-        df.unpersist(blocking=True)
-        del similarity._PAIR_BANDS_CACHE[k]
-
-
-def _evict_containment_memo() -> None:
-    """Evict the staged containment edge relation so each
-    dedup_containment rep measures the COLD BUILD (candidates + verify),
-    the quantity whose 3.3x-at-10x slope VERDICT r9/r10 asked to
-    decompose — not the ~0.2 s pin read the r9 study row reported."""
-    from sdu_hadoop_indexer_spark.llm import dedup
-
-    for k, df in list(dedup._CONTAINMENT_CACHE.items()):
-        df.unpersist(blocking=True)
-        del dedup._CONTAINMENT_CACHE[k]
-
-
 def run(sizes: list[int], vocab: int, out_root: str) -> dict:
     from gen_scale_fixture import generate, generate_embeddings
 
+    from sdu_hadoop_indexer_spark import caching
     from sdu_hadoop_indexer_spark.llm import dedup
     from sdu_hadoop_indexer_spark.session import get_spark
 
@@ -117,10 +88,12 @@ def run(sizes: list[int], vocab: int, out_root: str) -> dict:
             lambda spark, d: dedup.dedup_semantic_ivf(spark, d, cells="auto"),
         ),
     ]
-    evictors = {
-        "dedup_near_jaccard": _evict_near_jaccard_memo,
-        "dedup_containment": _evict_containment_memo,
-        "dedup_embedding_ann": _evict_pair_bands_memo,
+    # pins evicted before every rep, so each rep measures the cold build
+    # (for containment: candidates + verify), not a pin read
+    evicted_pins = {
+        "dedup_near_jaccard": "near_jaccard",
+        "dedup_containment": "containment",
+        "dedup_embedding_ann": "pair_bands",
     }
     # fixed-k SemDeDup is Θ(N²/k): ~312 M candidate pairs at 50 k vectors
     # (~8 min/rep) — the quadratic is already established by the 15 k point
@@ -138,9 +111,8 @@ def run(sizes: list[int], vocab: int, out_root: str) -> dict:
                 continue
             walls, rows = [], 0
             for _rep in range(2):
-                evict = evictors.get(name)
-                if evict:
-                    evict()
+                if name in evicted_pins:
+                    caching.clear(evicted_pins[name])
                 t0 = time.monotonic()
                 rows = fn(spark, d).count()
                 walls.append(time.monotonic() - t0)
