@@ -426,7 +426,21 @@ def canary_spin_ms() -> float:
 # row is defined as the cost of BUILDING the artifact — so the pin is
 # cleared before every timed sample. Without this, samples 2+
 # read the pin (~0.2 s) and the frozen row silently changes meaning.
-COLD_CACHES = {"dedup_containment": lambda: caching.clear("containment")}
+# The index-build rows are the same kind: the flat index is one persisted
+# pin per input, and each of these rows times building it.
+COLD_CACHES = {
+    "dedup_containment": lambda: caching.clear("containment"),
+    **dict.fromkeys(
+        (
+            "text_index_flat",
+            "text_index_nested",
+            "text_index_sharded",
+            "text_index_incremental",
+            "text_doclen",
+        ),
+        lambda: caching.clear("index_flat"),
+    ),
+}
 
 # Ops that get ONE untimed warm-in rep before their timed samples
 # (COLD_CACHES still clears per rep, so the data work stays cold).

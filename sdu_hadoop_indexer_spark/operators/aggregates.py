@@ -118,12 +118,33 @@ def agg_collect_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_GSETS_SQL = """
-SELECT r_name, n_name, count(*) AS n_cust,
-       CAST(sum(CAST(c_acctbal AS DECIMAL(25,4))) AS DOUBLE) AS sum_bal
+def _grand_total_on_empty(grouped: DataFrame, rows: DataFrame, **total) -> DataFrame:
+    """Append the grand-total ``()`` row that ROLLUP, CUBE and GROUPING SETS
+    owe on an empty input: SQL (DuckDB) returns it, while Spark's grouped
+    aggregate returns no row at all. ``rows`` is the aggregated input and
+    ``total`` gives each aggregate's value over zero rows (the other
+    columns are NULL). The row is kept only when ``rows`` counts 0, so a
+    non-empty input, whose ``()`` row Spark already emits, gains nothing."""
+    empty = rows.agg(F.count("*").alias("_n")).where(F.col("_n") == 0)
+    return grouped.unionByName(
+        empty.select(
+            *[
+                F.lit(total.get(c)).cast(grouped.schema[c].dataType).alias(c)
+                for c in grouped.columns
+            ]
+        )
+    )
+
+
+_GSETS_FROM = """
 FROM customer
 JOIN nation ON c_nationkey = n_nationkey
 JOIN region ON n_regionkey = r_regionkey
+"""
+_GSETS_SQL = f"""
+SELECT r_name, n_name, count(*) AS n_cust,
+       CAST(sum(CAST(c_acctbal AS DECIMAL(25,4))) AS DOUBLE) AS sum_bal
+{_GSETS_FROM}
 GROUP BY GROUPING SETS ((r_name, n_name), (r_name), ())
 """
 
@@ -133,7 +154,9 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPING SETS via Spark SQL over the registered views — same text as
     the oracle modulo dialect (identical here)."""
     register_views(spark, sf_dir)
-    return spark.sql(_GSETS_SQL)
+    return _grand_total_on_empty(
+        spark.sql(_GSETS_SQL), spark.sql(f"SELECT 1 {_GSETS_FROM}"), n_cust=0
+    )
 
 
 @register(
@@ -146,10 +169,11 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     n, r = table(spark, sf_dir, "nation"), table(spark, sf_dir, "region")
-    return (
-        n.join(r, n.n_regionkey == r.r_regionkey)
-        .rollup("r_name", "n_name")
-        .agg(F.count("*").alias("n_nations"))
+    rows = n.join(r, n.n_regionkey == r.r_regionkey)
+    return _grand_total_on_empty(
+        rows.rollup("r_name", "n_name").agg(F.count("*").alias("n_nations")),
+        rows,
+        n_nations=0,
     )
 
 
@@ -162,7 +186,11 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem")
-    return li.cube("l_returnflag", "l_linestatus").agg(F.count("*").alias("cnt"))
+    return _grand_total_on_empty(
+        li.cube("l_returnflag", "l_linestatus").agg(F.count("*").alias("cnt")),
+        li,
+        cnt=0,
+    )
 
 
 @register(
@@ -679,6 +707,10 @@ import math as _math
 _HLL_M = 256
 _HLL_AM2 = 0.7213 / (1 + 1.079 / _HLL_M) * _HLL_M * _HLL_M
 _HLL_LC = [_HLL_M * _math.log(_HLL_M / v) for v in range(1, _HLL_M + 1)]
+# DuckDB types a bare literal like 1419.56 as DECIMAL, and a DECIMAL → DOUBLE
+# cast can land one ulp off the Python float; a string cast parses the
+# shortest round-trip repr to exactly that double.
+_HLL_LC_SQL = "[" + ", ".join(f"'{x!r}'::DOUBLE" for x in _HLL_LC) + "]"
 
 
 @register(
@@ -712,7 +744,7 @@ _HLL_LC = [_HLL_M * _math.log(_HLL_M / v) for v in range(1, _HLL_M + 1)]
     )
     SELECT x.o_orderstatus, x.n_exact,
            CASE WHEN e.e_raw <= {2.5 * _HLL_M!r} AND e.v_zero > 0
-                THEN ([{", ".join(repr(x) for x in _HLL_LC)}]::DOUBLE[])[e.v_zero]
+                THEN ({_HLL_LC_SQL})[e.v_zero]
                 ELSE e.e_raw END AS hll_est
     FROM x JOIN e USING (o_orderstatus)
     """,

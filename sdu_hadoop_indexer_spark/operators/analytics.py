@@ -2801,11 +2801,15 @@ def ts_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         "day", "rev", F.max("rev").over(wc).cast("long").alias("runmax")
     )
     n = d.agg(F.count("*").cast("long").alias("n_days"))
-    return (
+    worst = (
         s.select("day", (F.col("runmax") - F.col("rev")).alias("dd"))
         .orderBy(F.desc("dd"), F.asc("day"))
         .limit(1)
-        .crossJoin(F.broadcast(n))
+    )
+    # n is one row even over no orders; the left join keeps it, with NULL
+    # drawdown and day, as the oracle's ungrouped aggregate does
+    return (
+        n.join(worst, how="left")
         .select(
             "n_days",
             F.col("dd").cast("long").alias("max_drawdown_cents"),

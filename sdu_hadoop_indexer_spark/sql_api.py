@@ -21,7 +21,11 @@ from .text.indexer import TOK_SQL, doclen, index_flat, index_nested, tokenize
 
 
 def register_search_views(spark: SparkSession, sf_dir: str) -> None:
-    """Expose base tables + derived search relations to spark.sql()."""
+    """Expose base tables + derived search relations to spark.sql().
+
+    Re-registered on every call: a temp view is one slot per session, so a
+    per-input memo would serve another input's views after A → B → A. The
+    views are cheap to register — they wrap the pinned index handles."""
     register_views(spark, sf_dir)
     tokenize(spark, sf_dir).createOrReplaceTempView("doc_tokens")
     index_flat(spark, sf_dir).createOrReplaceTempView("text_index")

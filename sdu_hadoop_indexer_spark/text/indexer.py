@@ -21,6 +21,13 @@ handles joins; for the agg we rely on the two-level build (partial agg on
 groups carry one row per (term, doc) not one per occurrence. At cluster scale
 the index sink should additionally be bucketed by ``term`` for co-located
 lookups.
+
+Build once, query many: the flat index is one persisted pin per input
+(``caching.pin``, form ``"persist"``), so every consumer — the nested and
+sharded indexes, ``doclen``, the search queries and the SQL views — reads
+the pinned postings instead of re-scanning and re-tokenizing the corpus.
+``tokenize`` pins only its plan handle (form ``"plan"``): token rows are
+never persisted, because fresh inputs (curation shards) reach it once each.
 """
 
 from __future__ import annotations
@@ -28,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import caching
 from ..catalog import spread, table
 from ..registry import jsonify_complex, register
 
@@ -55,7 +63,14 @@ def tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Generalizes App.scala:155 (``split("\\s")`` loop) + App.scala:154,160
     (position counter, with the B4 char-offset bug fixed to token ordinals).
+    The plan handle is pinned per input; execution still reads the parquet.
     """
+    return caching.pin(
+        "tokenize", spark, sf_dir, lambda: _tokenize(spark, sf_dir), "plan"
+    )
+
+
+def _tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread off the single-row-group scan (guide §2.5): the explode and
     # everything Catalyst fuses above it — the (term, doc_id) partial aggs
     # of the index family, hash folds, bigram windows — otherwise run on
@@ -82,14 +97,22 @@ def index_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     The reference's map-side product (App.scala:153-166) — one record per
     (word, doc) with its position list — as a hash aggregation. Catalyst
     runs it partial→final (the in-mapper-combining pattern, automatically).
+
+    Persisted once per input (``caching.pin``): the first action builds it,
+    every later consumer reads the cached postings. ``caching.clear(
+    "index_flat")`` releases it.
     """
-    return (
-        tokenize(spark, sf_dir)
-        .groupBy("term", "doc_id")
-        .agg(
-            F.sort_array(F.collect_list("pos")).alias("positions"),
-            F.count("*").alias("tf"),
-        )
+    return caching.pin(
+        "index_flat", spark, sf_dir, lambda: _postings(tokenize(spark, sf_dir)),
+        "persist",
+    )
+
+
+def _postings(toks: DataFrame) -> DataFrame:
+    """token rows → (term, doc_id, positions, tf), one row per (term, doc)."""
+    return toks.groupBy("term", "doc_id").agg(
+        F.sort_array(F.collect_list("pos")).alias("positions"),
+        F.count("*").alias("tf"),
     )
 
 
@@ -114,8 +137,14 @@ def index_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def doclen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document token count — the App.scala:168 TODO, implemented."""
-    return tokenize(spark, sf_dir).groupBy("doc_id").agg(F.count("*").alias("dl"))
+    """Per-document token count — the App.scala:168 TODO, implemented.
+    Σ tf over the pinned postings: the flat index groups exactly the token
+    rows, so the rows equal a count over ``tokenize``."""
+    return (
+        index_flat(spark, sf_dir)
+        .groupBy("doc_id")
+        .agg(F.sum("tf").alias("dl"))
+    )
 
 
 def wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -259,15 +288,7 @@ def index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full corpus (`text_index_nested`'s own oracle)."""
     split = 250  # fixture corpora are 500 docs at every SF
     base = index_flat(spark, sf_dir).where(F.col("doc_id") < split)
-    delta = (
-        tokenize(spark, sf_dir)
-        .where(F.col("doc_id") >= split)
-        .groupBy("term", "doc_id")
-        .agg(
-            F.sort_array(F.collect_list("pos")).alias("positions"),
-            F.count("*").alias("tf"),
-        )
-    )
+    delta = _postings(tokenize(spark, sf_dir).where(F.col("doc_id") >= split))
     return (
         base.unionByName(delta)
         .groupBy("term")

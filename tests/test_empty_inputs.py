@@ -28,7 +28,16 @@ def empty_dir(tmp_path_factory) -> str:
 
 @pytest.mark.parametrize(
     "name",
-    ["agg_ks_test", "agg_mann_whitney", "events_rfm_segments", "llm_mixing_weights"],
+    [
+        "agg_ks_test",
+        "agg_mann_whitney",
+        "events_rfm_segments",
+        "llm_mixing_weights",
+        "agg_rollup",
+        "agg_cube",
+        "agg_grouping_sets",
+        "ts_max_drawdown",
+    ],
 )
 def test_empty_relation_matches_oracle(spark, empty_dir, name):
     srows = spark_rows(all_queries()[name](spark, empty_dir))

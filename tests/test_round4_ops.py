@@ -287,6 +287,23 @@ def test_hll_portable_estimate_within_error_bound(spark, sf_dir):
         assert abs(r.hll_est - r.n_exact) / r.n_exact < 0.26, r
 
 
+def test_hll_linear_counting_table_is_exact_in_duckdb():
+    """The oracle's linear-counting literal must read back in DuckDB as the
+    very doubles the Spark side embeds; a DECIMAL-typed literal list lands
+    entry 227 one ulp off."""
+    import duckdb
+
+    from sdu_hadoop_indexer_spark.operators import aggregates
+
+    lc = aggregates._HLL_LC_SQL
+    typ, e227, full = duckdb.sql(
+        f"SELECT typeof({lc}), ({lc})[227], {lc}"
+    ).fetchone()
+    assert typ == "DOUBLE[]"
+    assert e227 == aggregates._HLL_LC[226]
+    assert full == aggregates._HLL_LC
+
+
 def test_linreg_matches_numpy(spark, sf_dir):
     """Closed-form OLS must agree with numpy's polyfit on the same rows."""
     import numpy as np

@@ -129,6 +129,18 @@ def test_generate_hot_term_share(tmp_path):
     assert zipf_head < 0.15, zipf_head
 
 
+def test_generate_zero_docs_keeps_fixture_schema(tmp_path):
+    """An empty corpus is a valid input: generating 0 docs must write a
+    zero-row documents.parquet with the fixture's schema."""
+    import pyarrow.parquet as pq
+
+    path = generate(0, str(tmp_path / "empty"), FIXTURE)
+    assert pq.read_metadata(path).num_rows == 0
+    assert pq.read_schema(path).equals(
+        pq.read_schema(f"{FIXTURE}/documents.parquet"), check_metadata=False
+    )
+
+
 def test_index_parity_scalar_protocol_crc_and_fingerprint(spark, sf_dir):
     """tools/index_parity.py's collect-free protocol rests on two facts —
     pin both: (a) Spark `crc32(encode(s,'UTF-8'))` == zlib.crc32 bit-exact

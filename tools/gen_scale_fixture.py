@@ -140,7 +140,8 @@ def generate(
         np.array(["en", "fr", "es", "de", "zh"]), size=n_docs,
         p=[0.5, 0.15, 0.15, 0.1, 0.1],
     )
-    sources = np.array([f"src{i}" for i in rng.integers(0, 20, size=n_docs)])
+    # a list, not np.array: an empty array of strings would be float64
+    sources = [f"src{i}" for i in rng.integers(0, 20, size=n_docs)]
     table = pa.table(
         {
             "doc_id": pa.array(range(n_docs), pa.int64()),
