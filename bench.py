@@ -44,6 +44,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from sdu_hadoop_indexer_spark import caching
 from sdu_hadoop_indexer_spark.registry import all_queries
 from sdu_hadoop_indexer_spark.session import get_spark
+from sdu_hadoop_indexer_spark.text.indexer import clear_index
 
 # Representative spread of SURVEY.md §2.B: flagship index, relational core
 # (scan/filter/agg/join/window/topk), search layer, streaming batch-forms,
@@ -426,8 +427,9 @@ def canary_spin_ms() -> float:
 # row is defined as the cost of BUILDING the artifact — so the pin is
 # cleared before every timed sample. Without this, samples 2+
 # read the pin (~0.2 s) and the frozen row silently changes meaning.
-# The index-build rows are the same kind: the flat index is one persisted
-# pin per input, and each of these rows times building it.
+# The index-build rows are the same kind: the flat index, doc lengths and
+# lexicon are persisted pins per input, and each of these rows times
+# building them.
 COLD_CACHES = {
     "dedup_containment": lambda: caching.clear("containment"),
     **dict.fromkeys(
@@ -438,7 +440,7 @@ COLD_CACHES = {
             "text_index_incremental",
             "text_doclen",
         ),
-        lambda: caching.clear("index_flat"),
+        clear_index,
     ),
 }
 

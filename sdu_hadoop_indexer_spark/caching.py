@@ -32,6 +32,14 @@ Policy (the whole of it):
   on a real cluster it is a staged parquet table (``reliable=True``).
 * ``clear(name)`` releases and drops every entry of ``name`` (all entries
   when ``name`` is None); ``stats(name)`` reports hits and builds.
+
+A build may also register its value as a temp view (the index pins do,
+under a per-input name): the view holds the plan that is persisted, so
+statements over it read the cached rows, and a rebuild re-registers it.
+Reach a pinned frame from ``spark.sql`` through such a view, never as a
+keyword DataFrame (``spark.sql(text, t=df)``): PySpark drops the temporary
+view it registers for ``df`` on return, and dropping it uncaches the pin
+while ``df.is_cached`` still reads True.
 """
 
 from __future__ import annotations

@@ -9,6 +9,12 @@ lifecycle the DataFrame API gets — same plans, same pushdown, same AQE.
 
 Both queries below are authored as SQL TEXT, not DataFrame calls, to pin
 that surface; their oracles are the same shape in DuckDB dialect.
+
+The index views wrap the pinned relations (``indexer.index_flat`` and
+``doclen``), so a view query reads the cached postings. Pinned frames reach
+``spark.sql`` only through registered views, never as keyword DataFrames
+(``spark.sql(text, t=df)``): PySpark drops the temporary view it makes for
+such a frame after the call, and dropping it uncaches the pin.
 """
 
 from __future__ import annotations
@@ -28,8 +34,13 @@ def register_search_views(spark: SparkSession, sf_dir: str) -> None:
     views are cheap to register — they wrap the pinned index handles."""
     register_views(spark, sf_dir)
     tokenize(spark, sf_dir).createOrReplaceTempView("doc_tokens")
-    index_flat(spark, sf_dir).createOrReplaceTempView("text_index")
     index_nested(spark, sf_dir).createOrReplaceTempView("text_index_nested_v")
+    _register_index_views(spark, sf_dir)
+
+
+def _register_index_views(spark: SparkSession, sf_dir: str) -> None:
+    """``text_index`` and ``doc_lengths`` over this input's pins."""
+    index_flat(spark, sf_dir).createOrReplaceTempView("text_index")
     doclen(spark, sf_dir).createOrReplaceTempView("doc_lengths")
 
 
@@ -92,18 +103,23 @@ def sql_revenue_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sql_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pure-SQL query over the DERIVED index views: length-normalized term
     frequency for one term, ranked — proves the inverted index is a
-    first-class SQL relation, not only a Python-side DataFrame."""
-    register_search_views(spark, sf_dir)
+    first-class SQL relation, not only a Python-side DataFrame.
+
+    Registers only the two views it reads, and binds the term as a
+    parameter. Both views are pins partitioned on doc_id, so the
+    shuffle-hash join and the top-25 run as one job with no exchange."""
+    _register_index_views(spark, sf_dir)
     return spark.sql(
         """
-        SELECT f.doc_id, f.tf, d.dl,
+        SELECT /*+ SHUFFLE_HASH(d) */ f.doc_id, f.tf, d.dl,
                CAST(floor(CAST(f.tf * 20000 + d.dl AS DOUBLE)
                           / (2 * d.dl)) AS DOUBLE) / 10000.0 AS norm_tf
         FROM text_index f JOIN doc_lengths d USING (doc_id)
-        WHERE f.term = 'join'
+        WHERE f.term = :term
         ORDER BY norm_tf DESC, f.doc_id
         LIMIT 25
-        """
+        """,
+        args={"term": "join"},
     )
 
 

@@ -26,11 +26,22 @@ Build once, query many: the flat index is one persisted pin per input
 (``caching.pin``, form ``"persist"``), so every consumer — the nested and
 sharded indexes, ``doclen``, the search queries and the SQL views — reads
 the pinned postings instead of re-scanning and re-tokenizing the corpus.
-``tokenize`` pins only its plan handle (form ``"plan"``): token rows are
-never persisted, because fresh inputs (curation shards) reach it once each.
+Beside it are pinned the per-document lengths (``doclen``) and the (term,
+df) ``lexicon``, both persisted, and the BM25 corpus scalars
+(``corpus_stats``, two Spark-computed doubles). ``tokenize`` pins only its
+plan handle (form ``"plan"``): token rows are never persisted, because
+fresh inputs (curation shards) reach it once each.
+
+Each persisted index relation is also a temp view named per input,
+``graft_<rel>_<sha1(sf_dir)[:12]>``, registered inside the pin's
+own build, so a rebuilt pin re-registers its view. ``query_index`` runs one
+parameterized ``spark.sql`` statement over those views: the search ops are
+one statement each, with the query terms bound as ``args``.
 """
 
 from __future__ import annotations
+
+import hashlib
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -102,10 +113,31 @@ def index_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     every later consumer reads the cached postings. ``caching.clear(
     "index_flat")`` releases it.
     """
-    return caching.pin(
-        "index_flat", spark, sf_dir, lambda: _postings(tokenize(spark, sf_dir)),
-        "persist",
+    return _pin_view(
+        "index_flat", "flat", spark, sf_dir,
+        lambda: _postings(tokenize(spark, sf_dir)),
     )
+
+
+def _view(rel: str, sf_dir: str) -> str:
+    """The temp view of pinned index relation ``rel`` for this input. One
+    name per input, so A → B → A never reads another input's view."""
+    return f"graft_{rel}_{hashlib.sha1(sf_dir.encode()).hexdigest()[:12]}"
+
+
+def _pin_view(
+    name: str, rel: str, spark: SparkSession, sf_dir: str, build
+) -> DataFrame:
+    """Persisted pin whose build also registers the relation's view. The
+    view holds the plan the pin persists, so Spark's CacheManager serves
+    every statement over it from the cached rows."""
+
+    def registered() -> DataFrame:
+        df = build()
+        df.createOrReplaceTempView(_view(rel, sf_dir))
+        return df
+
+    return caching.pin(name, spark, sf_dir, registered, "persist")
 
 
 def _postings(toks: DataFrame) -> DataFrame:
@@ -139,12 +171,74 @@ def index_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
 def doclen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document token count — the App.scala:168 TODO, implemented.
     Σ tf over the pinned postings: the flat index groups exactly the token
-    rows, so the rows equal a count over ``tokenize``."""
-    return (
-        index_flat(spark, sf_dir)
-        .groupBy("doc_id")
-        .agg(F.sum("tf").alias("dl"))
+    rows, so the rows equal a count over ``tokenize``. Persisted once per
+    input; the per-doc aggregation keeps the postings' doc_id partitioning,
+    so joins of the two on doc_id need no exchange."""
+    return _pin_view(
+        "doclen", "doclen", spark, sf_dir,
+        lambda: index_flat(spark, sf_dir).groupBy("doc_id").agg(
+            F.sum("tf").alias("dl")
+        ),
     )
+
+
+def lexicon(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(term, df), persisted once per input: one flat-index row per (term,
+    doc), so count(*) per term IS its document frequency. Coalesced to the
+    session's parallelism: every read of a pin runs a task per partition,
+    and the shuffle-partition count would be ~8× that here."""
+    return _pin_view(
+        "lexicon", "lexicon", spark, sf_dir,
+        lambda: index_flat(spark, sf_dir)
+        .groupBy("term")
+        .agg(F.count("*").alias("df"))
+        .coalesce(spark.sparkContext.defaultParallelism),
+    )
+
+
+def corpus_stats(spark: SparkSession, sf_dir: str) -> tuple:
+    """(n_docs, avgdl) as doubles computed by Spark over ``doclen`` — the
+    BM25 corpus scalars, bound into the scoring statement as parameters
+    (avgdl is None on an empty corpus)."""
+
+    def build() -> tuple:
+        row = doclen(spark, sf_dir).agg(
+            F.count("*").cast("double"), F.avg(F.col("dl").cast("double"))
+        ).first()
+        return row[0], row[1]
+
+    return caching.pin("corpus_stats", spark, sf_dir, build, "plan")
+
+
+# The persisted index pins, dependents first.
+INDEX_PINS = ("doclen", "lexicon", "index_flat")
+_VIEWS = {"flat": index_flat, "doclen": doclen, "lexicon": lexicon}
+
+
+def clear_index() -> None:
+    """Release every persisted index pin, so the next consumer times a
+    build instead of a read of the pin."""
+    for name in INDEX_PINS:
+        caching.clear(name)
+
+
+def query_index(
+    spark: SparkSession, sf_dir: str, text: str, **args
+) -> DataFrame:
+    """One parameterized statement over this input's index views: each
+    ``{flat}``, ``{doclen}`` or ``{lexicon}`` in ``text`` becomes the
+    relation's view, and ``args`` bind the statement's ``:name`` markers.
+    The pin accessor of every named view runs first, so a cleared or stale
+    pin is rebuilt, and its view re-registered, before the statement
+    resolves the name. Pinned frames reach ``spark.sql`` only by view name,
+    never as keyword DataFrames, which PySpark uncaches on return (see
+    ``caching``)."""
+    names = {}
+    for rel, pinned in _VIEWS.items():
+        if "{" + rel + "}" in text:
+            pinned(spark, sf_dir)
+            names[rel] = _view(rel, sf_dir)
+    return spark.sql(text.format(**names), args=args)
 
 
 def wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -212,6 +306,16 @@ register(
 
 N_POSTING_SHARDS = 8
 
+# `index_sharded` as statement text over the flat view; a term filter on top
+# of it pushes below the aggregate
+SHARDED_SQL = f"""
+SELECT term, CAST(pmod(doc_id, {N_POSTING_SHARDS}) AS INT) AS shard,
+       sort_array(collect_list(struct(doc_id, positions))) AS postings,
+       count(DISTINCT doc_id) AS df_shard
+FROM {{flat}}
+GROUP BY 1, 2
+"""
+
 
 def index_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document-sharded nested index: `(term, shard, postings, df_shard)`
@@ -238,19 +342,7 @@ def index_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     rather than DuckDB's sign-preserving bare `%` (ADVICE r12: the two
     diverge on negative ids; fixture ids are non-negative, but the parity
     contract should not depend on that invariant)."""
-    flat = index_flat(spark, sf_dir)
-    return (
-        flat.withColumn(
-            "shard", F.pmod("doc_id", F.lit(N_POSTING_SHARDS)).cast("int")
-        )
-        .groupBy("term", "shard")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("doc_id", "positions"))
-            ).alias("postings"),
-            F.countDistinct("doc_id").alias("df_shard"),
-        )
-    )
+    return query_index(spark, sf_dir, SHARDED_SQL)
 
 
 register(

@@ -6,28 +6,45 @@ phrase match (the payoff for fixing reference bug B4: positions are token
 ordinals, App.scala:160), and the TF-IDF/BM25 ranking that the reference's
 "emit/save total document length" TODO (App.scala:168) was reaching toward.
 
-Every index query reads the pinned flat index (``indexer.index_flat``,
-persisted once per input): the postings are built once, and each query only
-filters, joins and aggregates them — none re-scans or re-tokenizes the
-documents. Only the bigram and collocation ops, which need token order
-rather than postings, still read ``tokenize``.
+Every index query reads the pinned index relations (``indexer.index_flat``,
+``doclen`` and ``lexicon``, persisted once per input): the postings are built
+once, and each query only filters, joins and aggregates them — none re-scans
+or re-tokenizes the documents. Only the bigram and collocation ops, which
+need token order rather than postings, still read ``tokenize``.
+
+Each index query is ONE parameterized ``spark.sql`` statement
+(``indexer.query_index``) over the per-input views of those pins, with the
+query terms bound as ``args``: the DataFrame builds in a handful of py4j
+calls instead of one per Column node. Joins on doc_id carry
+``/*+ SHUFFLE_HASH */``: the pinned postings and doc lengths are both
+hash-partitioned on doc_id, so phrase, proximity, self-positional and
+snippet queries run as one Spark job with no exchange, where a size-chosen
+broadcast of the same postings would run a second job.
 
 Scale notes: every query here is a composition of the flat index (one row per
 (term, doc)) with small derived dims (df table, doclen table, corpus scalars).
-The df/avgdl sides are tiny → broadcast joins; the flat index never re-sorts
+The df side is query-sized → broadcast; the flat index never re-sorts
 globally. Phrase match stays posting-local (array intersection per (doc,
 term-pair) row), not positional explode, so its cost is O(matching docs).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..operators.parity import ratio
-from ..registry import jsonify_complex, register
-from .indexer import TOK_SQL, doclen, index_flat, tokenize
+from ..registry import register
+from .indexer import (
+    SHARDED_SQL,
+    TOK_SQL,
+    corpus_stats,
+    index_flat,
+    lexicon,
+    query_index,
+    tokenize,
+)
 
 # Shared DuckDB CTE: the flat positional index.
 FLAT_SQL = f"""
@@ -38,8 +55,16 @@ flat AS (
 )
 """
 
+TERM = "join"
 QUERY_TERMS = ("join", "hash", "scan")
 PHRASE = ("fast", "join")
+
+
+def _markers(terms: tuple[str, ...]) -> tuple[str, dict[str, str]]:
+    """``:t0, :t1, …`` parameter markers for a query's terms, and the
+    values they bind."""
+    args = {f"t{i}": t for i, t in enumerate(terms)}
+    return ", ".join(f":{k}" for k in args), args
 
 
 @register(
@@ -53,10 +78,12 @@ PHRASE = ("fast", "join")
 def term_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-term query → posting docs with positions (R10 consumer side).
     positions emitted as canonical JSON for the driver hash gate."""
-    return jsonify_complex(
-        index_flat(spark, sf_dir)
-        .where(F.col("term") == "join")
-        .select("doc_id", "positions", "tf")
+    return query_index(
+        spark,
+        sf_dir,
+        "SELECT doc_id, to_json(positions) AS positions, tf"
+        " FROM {flat} WHERE term = :term",
+        term=TERM,
     )
 
 
@@ -79,16 +106,19 @@ def term_lookup_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scatter-gather every doc-partitioned search engine serves queries
     with, and the reason the hot-term write straggler can be sharded away
     without a consumer-visible contract change (tf rebuilds as
-    size(positions), so shards carry no redundant payload)."""
-    from .indexer import index_sharded
-
-    sh = index_sharded(spark, sf_dir).where(F.col("term") == "join")
-    return jsonify_complex(
-        sh.select(F.explode("postings").alias("p")).select(
-            F.col("p.doc_id").alias("doc_id"),
-            F.col("p.positions").alias("positions"),
-            F.size("p.positions").cast("long").alias("tf"),
-        )
+    size(positions), so shards carry no redundant payload). The term
+    filter pushes below the shard aggregation, so only the query term's
+    postings are regrouped."""
+    return query_index(
+        spark,
+        sf_dir,
+        f"""
+        SELECT p.doc_id, to_json(p.positions) AS positions,
+               CAST(size(p.positions) AS BIGINT) AS tf
+        FROM ({SHARDED_SQL}) LATERAL VIEW explode(postings) e AS p
+        WHERE term = :term
+        """,
+        term=TERM,
     )
 
 
@@ -104,15 +134,18 @@ def term_lookup_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def bool_and(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Boolean AND: docs containing every query term (postings intersection
-    expressed as a grouped count over the flat index — one shuffle on doc_id,
-    no pairwise joins, so it scales to long queries)."""
-    return (
-        index_flat(spark, sf_dir)
-        .where(F.col("term").isin(*QUERY_TERMS))
-        .groupBy("doc_id")
-        .agg(F.countDistinct("term").alias("n_terms"))
-        .where(F.col("n_terms") == len(QUERY_TERMS))
-        .select("doc_id")
+    expressed as a grouped count over the flat index — no pairwise joins, so
+    it scales to long queries, and no shuffle: the pinned postings are
+    already partitioned on doc_id)."""
+    marks, args = _markers(QUERY_TERMS)
+    return query_index(
+        spark,
+        sf_dir,
+        f"""
+        SELECT doc_id FROM {{flat}} WHERE term IN ({marks})
+        GROUP BY doc_id HAVING count(DISTINCT term) = {len(QUERY_TERMS)}
+        """,
+        **args,
     )
 
 
@@ -133,20 +166,20 @@ def phrase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Phrase query "fast join" via position adjacency (R4 payoff): a doc
     matches where some pos(t1)+1 ∈ positions(t2). Pure array intersection on
     the postings self-join — no token re-explosion."""
-    flat = index_flat(spark, sf_dir)
-    a = flat.where(F.col("term") == PHRASE[0]).select(
-        "doc_id", F.col("positions").alias("pos_a")
-    )
-    b = flat.where(F.col("term") == PHRASE[1]).select(
-        "doc_id", F.col("positions").alias("pos_b")
-    )
-    hits = F.array_intersect(
-        F.transform("pos_a", lambda p: p + 1), F.col("pos_b")
-    )
-    return (
-        a.join(b, "doc_id")
-        .select("doc_id", F.size(hits).alias("n_hits"))
-        .where(F.col("n_hits") > 0)
+    _, args = _markers(PHRASE)
+    return query_index(
+        spark,
+        sf_dir,
+        """
+        SELECT doc_id, n_hits FROM (
+            SELECT /*+ SHUFFLE_HASH(b) */ a.doc_id,
+                   size(array_intersect(transform(a.positions, p -> p + 1),
+                                        b.positions)) AS n_hits
+            FROM {flat} a JOIN {flat} b ON a.doc_id = b.doc_id
+            WHERE a.term = :t0 AND b.term = :t1
+        ) WHERE n_hits > 0
+        """,
+        **args,
     )
 
 
@@ -171,18 +204,20 @@ def join_self_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
     being the join-operator demonstration: the adjacency test is a boolean
     join predicate, and both postings' tf columns survive into the output.
     Scale: the join keys on doc_id after term filters — each side is one
-    term's postings, so the shuffle is tiny relative to the index."""
-    flat = index_flat(spark, sf_dir)
-    a = flat.where(F.col("term") == "table").select(
-        "doc_id", F.col("positions").alias("pos_a"), F.col("tf").alias("tf_a")
+    term's postings, and both are read from the doc_id-partitioned pin, so
+    the join needs no shuffle at all."""
+    _, args = _markers(("table", "hash"))
+    return query_index(
+        spark,
+        sf_dir,
+        """
+        SELECT /*+ SHUFFLE_HASH(b) */ a.doc_id, a.tf AS tf_a, b.tf AS tf_b
+        FROM {flat} a JOIN {flat} b ON a.doc_id = b.doc_id
+        WHERE a.term = :t0 AND b.term = :t1
+          AND arrays_overlap(transform(b.positions, p -> p - 1), a.positions)
+        """,
+        **args,
     )
-    b = flat.where(F.col("term") == "hash").select(
-        "doc_id", F.col("positions").alias("pos_b"), F.col("tf").alias("tf_b")
-    )
-    adjacent = F.arrays_overlap(
-        F.transform("pos_b", lambda p: p - 1), F.col("pos_a")
-    )
-    return a.join(b, "doc_id").where(adjacent).select("doc_id", "tf_a", "tf_b")
 
 
 @register(
@@ -199,10 +234,10 @@ def join_self_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tf_idf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TF-IDF scoring (R16+R17 generalized): tf × ln(N/df).
 
-    df table and the N scalar are broadcast; the flat index streams through
-    unshuffled."""
+    df table (the pinned lexicon) and the N scalar are broadcast; the flat
+    index streams through unshuffled."""
     flat = index_flat(spark, sf_dir)
-    dfs = flat.groupBy("term").agg(F.count("*").alias("df"))
+    dfs = lexicon(spark, sf_dir)
     n = table(spark, sf_dir, "documents").agg(F.count("*").alias("n_docs"))
     # df is vocab-sized (corpus-growing): broadcast only under the shared
     # docs-bytes gate, else co-partitioned shuffle on term (VERDICT r9 #1)
@@ -256,36 +291,42 @@ def tf_idf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 top-10 (k1=1.2, b=0.75) for the 3-term query — the ranking the
     reference's doc-length TODO (App.scala:168) implies. Closed-form column
-    expression; only shuffles are the index build and one groupBy(doc_id)."""
+    expression over the pinned postings, lexicon and doc lengths; no
+    shuffle: the postings and doc lengths are co-partitioned on doc_id.
+
+    The corpus scalars (n_docs, avgdl) are pinned doubles computed by Spark
+    and bound as parameters; k1 and b are double literals (``D``: a bare
+    ``1.2`` is a DECIMAL in Spark SQL). Every term folds in the same order
+    as the DataFrame form it replaces, so scores match it bit for bit."""
     k1, b = 1.2, 0.75
-    flat = index_flat(spark, sf_dir)
-    dl = doclen(spark, sf_dir)
-    stats = dl.agg(
-        F.count("*").cast("double").alias("n_docs"),
-        F.avg(F.col("dl").cast("double")).alias("avgdl"),
-    )
+    n_docs, avgdl = corpus_stats(spark, sf_dir)
+    marks, args = _markers(QUERY_TERMS)
     # only the query terms' df rows are ever probed — filter BEFORE the
     # broadcast so the build side is query-sized (constant), not
     # vocab-sized, at any corpus scale
-    dfs = (
-        flat.where(F.col("term").isin(*QUERY_TERMS))
-        .groupBy("term")
-        .agg(F.count("*").alias("df"))
-    )
-    idf = F.log(1 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    tf_part = (F.col("tf") * (k1 + 1)) / (
-        F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))
-    )
-    return (
-        flat.where(F.col("term").isin(*QUERY_TERMS))
-        .join(F.broadcast(dfs), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .groupBy("doc_id")
-        .agg(F.sum(idf * tf_part).alias("score"))
-        .orderBy(F.desc("score"), "doc_id")
-        .limit(10)
-        .select("doc_id", (F.round("score", 4) + F.lit(0.0)).alias("bm25"))
+    return query_index(
+        spark,
+        sf_dir,
+        f"""
+        SELECT doc_id, round(score, 4) + 0.0D AS bm25 FROM (
+            SELECT /*+ BROADCAST(l), SHUFFLE_HASH(d) */ f.doc_id,
+                   sum(ln(1 + (:n_docs - l.df + 0.5D) / (l.df + 0.5D))
+                       * (f.tf * ({k1!r}D + 1)
+                          / (f.tf + {k1!r}D * (1 - {b!r}D
+                                               + {b!r}D * d.dl / :avgdl))))
+                       AS score
+            FROM {{flat}} f
+            JOIN (SELECT term, df FROM {{lexicon}} WHERE term IN ({marks})) l
+              ON f.term = l.term
+            JOIN {{doclen}} d ON f.doc_id = d.doc_id
+            WHERE f.term IN ({marks})
+            GROUP BY f.doc_id
+        )
+        ORDER BY score DESC, doc_id LIMIT 10
+        """,
+        n_docs=n_docs,
+        avgdl=avgdl,
+        **args,
     )
 
 
@@ -552,37 +593,24 @@ def text_fuzzy_term_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     `orderBy().limit(5)` — Catalyst plans TakeOrderedAndProject (per-
     partition top-5 + tiny driver merge), not the single-partition
     WindowExec a global `row_number` would force (round-2 verdict note).
+    The vocabulary is the pinned lexicon, so no call re-aggregates the index.
     """
-    # one flat-index row per (term, doc): count(*) per term IS its df
-    vocab = index_flat(spark, sf_dir).groupBy("term").agg(F.count("*").alias("df"))
-    q = (
-        vocab.orderBy(F.desc("df"), "term")
-        .limit(5)
-        .select(
-            F.concat(
-                F.substring("term", 1, 1), F.expr("substring(term, 3)")
-            ).alias("typo")
+    return query_index(
+        spark,
+        sf_dir,
+        """
+        WITH q AS (
+            SELECT typo,
+                   explode(sequence(length(typo) - 2, length(typo) + 2)) AS blk
+            FROM (SELECT concat(substring(term, 1, 1), substring(term, 3)) AS typo
+                  FROM {lexicon} ORDER BY df DESC, term LIMIT 5)
+            WHERE length(typo) >= 3
         )
-        .where(F.length("typo") >= 3)
-        .select(
-            "typo",
-            F.explode(
-                F.sequence(
-                    F.length("typo") - 2, F.length("typo") + 2
-                )
-            ).alias("blk"),
-        )
-    )
-    v = vocab.select("term", "df", F.length("term").alias("blk"))
-    return (
-        q.join(v, "blk")
-        .where(F.levenshtein("typo", "term") <= 2)
-        .select(
-            "typo",
-            F.col("term").alias("matched"),
-            "df",
-            F.levenshtein("typo", "term").alias("dist"),
-        )
+        SELECT q.typo, v.term AS matched, v.df,
+               levenshtein(q.typo, v.term) AS dist
+        FROM q JOIN {lexicon} v ON q.blk = length(v.term)
+        WHERE levenshtein(q.typo, v.term) <= 2
+        """,
     )
 
 
@@ -617,24 +645,21 @@ def proximity_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale shape is unchanged: one doc_id-keyed join of two term postings,
     no token re-explosion.
     """
-    flat = index_flat(spark, sf_dir)
-    a = flat.where(F.col("term") == PHRASE[0]).select(
-        "doc_id", F.col("positions").alias("pos_a")
-    )
-    b = flat.where(F.col("term") == PHRASE[1]).select(
-        "doc_id", F.col("positions").alias("pos_b")
-    )
-    near = F.filter(
-        "pos_a",
-        lambda pa: F.exists(
-            "pos_b",
-            lambda pb: (F.abs(pa - pb) <= PROX_K) & (pa != pb),
-        ),
-    )
-    return (
-        a.join(b, "doc_id")
-        .select("doc_id", F.size(near).alias("n_anchor_hits"))
-        .where(F.col("n_anchor_hits") > 0)
+    _, args = _markers(PHRASE)
+    return query_index(
+        spark,
+        sf_dir,
+        f"""
+        SELECT doc_id, n_anchor_hits FROM (
+            SELECT /*+ SHUFFLE_HASH(b) */ a.doc_id,
+                   size(filter(a.positions, pa -> exists(b.positions,
+                        pb -> abs(pa - pb) <= {PROX_K} AND pa <> pb)))
+                       AS n_anchor_hits
+            FROM {{flat}} a JOIN {{flat}} b ON a.doc_id = b.doc_id
+            WHERE a.term = :t0 AND b.term = :t1
+        ) WHERE n_anchor_hits > 0
+        """,
+        **args,
     )
 
 
@@ -667,34 +692,31 @@ def text_snippet(spark: SparkSession, sf_dir: str) -> DataFrame:
     Built from the pinned postings, not by indexing a re-split array:
     `tokenize` ordinals count empty split slots, so positional array
     indexing would drift on multi-space documents. The first hit is
-    `positions[0]` of the query term's posting (positions are sorted), and
-    the context is every posting of the hit docs filtered to the ±r window
-    and exploded — ~(2r+1) rows per hit, never a re-scan of the text. The
-    SQL-text expressions build in one JVM call each, where the Python
-    lambda forms cost a py4j round trip per node.
+    `positions[0]` of the query term's posting (positions are sorted); the
+    hits join back to their docs' postings, each filtered to the ±r window
+    and exploded — ~(2r+1) rows per hit, never a re-scan of the text and
+    never a sort of the whole index. Both join sides are the doc_id-
+    partitioned pin, so the join and the per-doc assembly need no exchange.
 
     Ordered aggregation: Spark array_sort(collect_list(struct)) — the
     `agg_collect_sorted` discipline — mirrors DuckDB's
     `string_agg(... ORDER BY pos)` exactly."""
-    # the pinned postings are doc_id-partitioned when tokenize spreads its
-    # scan, so the per-doc window and the per-doc assembly need no exchange
-    first = F.expr(
-        "min(CASE WHEN term = 'join' THEN positions[0] END)"
-        " OVER (PARTITION BY doc_id)"
-    )
-    near = F.expr(
-        f"explode(filter(positions, x -> x BETWEEN p - {SNIPPET_RADIUS}"
-        f" AND p + {SNIPPET_RADIUS}))"
-    )
-    ctx = (
-        index_flat(spark, sf_dir)
-        .select("doc_id", "term", "positions", first.alias("p"))
-        .where(F.col("p").isNotNull())
-        .select("doc_id", "p", "term", near.alias("pos"))
-    )
-    return ctx.groupBy("doc_id", F.col("p").alias("first_pos")).agg(
-        F.expr(
-            "array_join(transform(array_sort(collect_list(struct(pos, term))),"
-            " s -> s.term), ' ')"
-        ).alias("snippet")
+    return query_index(
+        spark,
+        sf_dir,
+        f"""
+        SELECT /*+ SHUFFLE_HASH(h) */ f.doc_id, h.p AS first_pos,
+               array_join(transform(
+                   array_sort(collect_list(named_struct('pos', w.pos,
+                                                        'term', f.term))),
+                   s -> s.term), ' ') AS snippet
+        FROM (SELECT doc_id, positions[0] AS p FROM {{flat}}
+              WHERE term = :term) h
+        JOIN {{flat}} f ON f.doc_id = h.doc_id
+        LATERAL VIEW explode(filter(f.positions,
+            x -> x BETWEEN h.p - {SNIPPET_RADIUS} AND h.p + {SNIPPET_RADIUS}))
+            w AS pos
+        GROUP BY f.doc_id, h.p
+        """,
+        term=TERM,
     )

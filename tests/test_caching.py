@@ -59,6 +59,24 @@ def test_no_hand_rolled_caches():
     assert not found
 
 
+def test_no_dataframe_kwargs_to_spark_sql():
+    """``spark.sql(text, t=df)`` registers ``df`` under a temporary view and
+    drops that view on return, which uncaches a pinned ``df``; the package
+    passes ``spark.sql`` only its text and bound ``args``."""
+    found = []
+    for path in (REPO / "sdu_hadoop_indexer_spark").rglob("*.py"):
+        tree = ast.parse(path.read_text(), str(path))
+        found += [
+            f"{path.name}:{n.lineno}"
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "sql"
+            and any(k.arg != "args" for k in n.keywords)
+        ]
+    assert not found
+
+
 def _persistent_rdds(spark) -> int:
     return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
 

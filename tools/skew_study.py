@@ -251,7 +251,6 @@ def run(fixture: str) -> list[dict]:
 
     results = []
     sums: dict[str, tuple[int, int]] = {}
-    from sdu_hadoop_indexer_spark import caching
     from sdu_hadoop_indexer_spark import session as session_mod
 
     for name, fn, conf in runs:
@@ -272,8 +271,8 @@ def run(fixture: str) -> list[dict]:
         try:
             reps = []
             for _rep in range(3):
-                # the index rows time the build, not the persisted pin
-                caching.clear("index_flat")
+                # the index rows time the build, not the persisted pins
+                indexer.clear_index()
                 before = sm.snapshot()
                 t0 = time.monotonic()
                 fn(spark, fixture).write.format("noop").mode(
